@@ -742,17 +742,19 @@ def build_parser() -> argparse.ArgumentParser:
         "--near-dup",
         action="store_true",
         help="maintain the persisted near-dup store under --output "
-        "(plans/dedup_store: content-diff, delta-only MinHash+LSH, "
-        "cluster upserts). Composable with a crawl or --incremental "
-        "(the dedup tick runs after each loop), or standalone with just "
-        "--output (one tick over the existing docs table)",
+        "(plans/dedup_store: content-diff, delta-only MinHash+LSH, one "
+        "snapshot-table commit per tick to <output>/dedup, keyed by id). "
+        "Composable with a crawl or --incremental (the dedup tick runs "
+        "after each loop), or standalone with just --output (one tick "
+        "over the existing docs table)",
     )
     p.add_argument(
         "--assemble-store",
         action="store_true",
         help="maintain the persisted conversation-assembly store under "
         "--output (plans/assembly_store: per-conversation fingerprint "
-        "diff, delta-only re-assembly, partition-scoped upserts). "
+        "diff, delta-only re-assembly, one snapshot-table commit per "
+        "tick to <output>/assembled, keyed by conv_id). "
         "Composable with a crawl or --incremental (the assembly tick "
         "runs after each loop), or standalone with just --output (one "
         "tick over the existing docs table); honors --assemble-max-turns",

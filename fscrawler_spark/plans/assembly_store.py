@@ -1,37 +1,41 @@
 """Persisted conversation-assembly store under an extraction output —
 the steady-state tick for the assembly tier: each call diffs
 per-CONVERSATION content fingerprints against what was assembled last,
-re-assembles ONLY the changed conversations, and upserts the assembled
-table in place. At 10^12 turns a tick's assembly work scales with the
-changed-conversation set, never the corpus — the same delta-shaped
+re-assembles ONLY the changed conversations, and commits them to one
+keyed snapshot table. At 10^12 turns a tick's assembly work scales with
+the changed-conversation set, never the corpus — the same delta-shaped
 contract as the extraction tick (plans/pipeline.run_incremental_update)
 and the dedup store (plans/dedup_store), applied to the derived
 training-document table.
 
-Layout (under ``<output_dir>/assembled/``):
+Layout: ``<output_dir>/assembled/`` is a SnapshotTable
+(plans/snapshot_table) with one row per conversation, keyed by
+``conv_id``:
 
-  state/  (conv_id, conv_sha, db)             per-conv content fingerprint
-  docs/   (conv_id, doc, n_turns, n_chars, db) the assembled table
-  _assembly_meta.json                          params fingerprint + dirty
+  (conv_id, conv_sha, doc, n_turns, n_chars)
 
-``db = pmod(xxhash64(conv_id), store_buckets)`` partitions both tables
-so an upsert rewrites only the partitions holding touched conversations
-(dynamic partition overwrite; emptied partitions swept). At 100 TB swap
-the parquet dirs for Iceberg tables and the upserts become MERGE INTO.
+Read it with ``SnapshotTable(<out>/assembled).read(spark)``; like any
+snapshot table it time-travels, serves ``--table-changes``
+(``--table-keys conv_id``), and keeps old snapshots on disk until
+``--table-history --table-expire N --output <out>/assembled`` reclaims
+them. The first tick bootstraps with a clustered ``overwrite``; every
+later tick is ONE ``apply_delta`` (changed conversations upserted,
+vanished ones deleted), so a crash before that commit leaves the
+previous snapshot current and the next tick redoes the same delta.
 
 The per-conv fingerprint is a sha256 over the SORTED (turn_idx, role,
 sha(text)) lines of the conversation — order- and partition-independent,
 and sensitive to exactly what assembly renders (a role or text edit, a
 new/removed turn). Computing it is one corpus-scale scan + one shuffle
 of a single short row per conversation — the same
-"one content-diff pass per tick" budget as dedup_store's sha join; the
+"one content-diff pass per tick" budget as dedup_store's sha diff; the
 expensive part (building the documents) runs on the delta only.
 
-Safety contract (mirrors dedup_store): params fingerprint refusal on
-drift, a dirty marker bracketing the two-table upsert, and the
-per-output job lock. First call auto-bootstraps (everything is a
-delta). ``asm_version`` rides the fingerprint — bump it when the render
-template changes, so stores assembled under old markup refuse loudly.
+Safety contract (shared with dedup_store): the params fingerprint rides
+the commit summary and drift refuses; the per-output job lock serializes
+ticks. First call auto-bootstraps (everything is a delta).
+``asm_version`` rides the fingerprint — bump it when the render template
+changes, so stores assembled under old markup refuse loudly.
 """
 
 from __future__ import annotations
@@ -43,28 +47,19 @@ from pyspark.sql import functions as F
 
 from fscrawler_spark.functions.assembly import assemble_conversations
 from fscrawler_spark.plans.dedup_store import (
-    _check_meta,
-    _db_col,
-    _upsert,
-    _write_meta,
+    _commit,
+    _content_diff,
+    _docs_table,
+    _open_store,
+    _rows,
+    _small,
 )
 from fscrawler_spark.session import materialize
 
-_META = "_assembly_meta.json"
-_PARAM_KEYS = ("max_turns", "store_buckets", "tool_col")
+STORE_DIR = "assembled"
 # bump when the render template (assembly.ROLE_OPEN/CLOSE/TURN_SEP) or
 # the fingerprint recipe changes: stored docs become incomparable
 _ASM_VERSION = 1
-
-
-def _paths(output_dir: str) -> dict[str, str]:
-    root = os.path.join(output_dir, "assembled")
-    return {
-        "root": root,
-        "state": os.path.join(root, "state"),
-        "docs": os.path.join(root, "docs"),
-        "meta": os.path.join(root, _META),
-    }
 
 
 def conversation_fingerprints(
@@ -128,7 +123,6 @@ def assembly_tick(
     text_col: str = "extracted",
     tool_col: str | None = None,
     max_turns: int | None = None,
-    store_buckets: int = 32,
 ) -> dict:
     """One assembly tick over ``corpus`` (default: the docs table at
     ``output_dir``). Re-assembles only conversations whose fingerprint
@@ -144,7 +138,7 @@ def assembly_tick(
     with _JobLock(output_dir, "assembly-tick"):
         return _assembly_tick_impl(
             spark, output_dir, corpus, conv_col, idx_col, role_col,
-            text_col, tool_col, max_turns, store_buckets,
+            text_col, tool_col, max_turns,
         )
 
 
@@ -158,21 +152,11 @@ def _assembly_tick_impl(
     text_col: str,
     tool_col: str | None,
     max_turns: int | None,
-    store_buckets: int,
 ) -> dict:
-    from fscrawler_spark.operators.deletes import has_parquet_files
-
-    p = _paths(output_dir)
-    params = dict(zip(_PARAM_KEYS, (max_turns, store_buckets, tool_col)))
-    params["asm_version"] = _ASM_VERSION
-    _check_meta(p["meta"], params, p["root"], "assembly", "assembled")
+    params = {"max_turns": max_turns, "tool_col": tool_col, "asm_version": _ASM_VERSION}
+    table = _open_store(os.path.join(output_dir, STORE_DIR), params, "assembly")
     if corpus is None:
-        docs_path = os.path.join(output_dir, "docs")
-        if not has_parquet_files(spark, docs_path):
-            raise FileNotFoundError(
-                f"no docs table at {docs_path} — run run_extraction_job first"
-            )
-        corpus = spark.read.parquet(docs_path)
+        corpus = _docs_table(spark, output_dir)
     needed = [conv_col, idx_col, role_col, text_col] + (
         [tool_col] if tool_col is not None else []
     )
@@ -185,105 +169,41 @@ def _assembly_tick_impl(
             f"missing {missing} (has {corpus.columns})"
         )
 
-    # materialize the fingerprints ONCE (one short row per conversation):
-    # the changed/gone diffs AND the state upsert all consume them, and a
-    # lazy plan would re-run the corpus scan + conv shuffle per consumer
-    cur = materialize(
-        conversation_fingerprints(
-            corpus, conv_col, idx_col, role_col, text_col, tool_col
-        )
+    cur = conversation_fingerprints(
+        corpus, conv_col, idx_col, role_col, text_col, tool_col
     )
-    has_state = has_parquet_files(spark, p["state"])
-    if has_state:
-        # ONE full-outer diff replaces the former changed-anti-join +
-        # gone-anti-join pair (two materializes + two count jobs → one
-        # delta-sized materialize + one aggregate): a conv is CHANGED
-        # when present in cur with no matching (conv_id, conv_sha) in
-        # state, GONE when present only in state — identical sets.
-        state = spark.read.parquet(p["state"]).select(
-            "conv_id", F.col("conv_sha").alias("_state_sha")
-        )
-        j = cur.join(state, "conv_id", "full_outer")
-        changed_f = F.col("conv_sha").isNotNull() & ~F.col("conv_sha").eqNullSafe(
-            F.col("_state_sha")
-        )
-        gone_f = F.col("conv_sha").isNull()
-        diff = materialize(
-            j.filter(changed_f | gone_f).select(
-                "conv_id", changed_f.alias("_chg"), gone_f.alias("_gone")
+    stored = table.read(spark) if table.exists() else None
+    changed, gone, n_changed, n_gone = _content_diff(cur, stored, "conv_id", "conv_sha")
+    upserts = None
+    if n_changed:
+        # the delta-sized work: assemble ONLY the changed conversations.
+        # Broadcast the key set when small so the semi-join never
+        # shuffles the corpus (same shape as the extraction tick's
+        # changed-keys join).
+        changed = _small(changed, n_changed)
+        assembled = assemble_conversations(
+            corpus.join(
+                changed.select(F.col("conv_id").alias(conv_col)), conv_col, "left_semi"
+            ),
+            conv_col=conv_col,
+            idx_col=idx_col,
+            role_col=role_col,
+            text_col=text_col,
+            tool_col=tool_col,
+            max_turns=max_turns,
+        ).withColumnRenamed(conv_col, "conv_id")
+        # materialized once: the commit's key probes, touched-file
+        # pruning and staging write all consume it
+        upserts = materialize(
+            assembled.join(changed, "conv_id").select(
+                "conv_id", "conv_sha", "doc", "n_turns", "n_chars"
             )
         )
-        counts = diff.agg(
-            F.sum(F.col("_chg").cast("long")).alias("c"),
-            F.sum(F.col("_gone").cast("long")).alias("g"),
-        ).first()
-        n_changed, n_gone = int(counts["c"] or 0), int(counts["g"] or 0)
-        changed_ids = diff.filter(F.col("_chg")).select("conv_id")
-        gone_ids = diff.filter(F.col("_gone")).select("conv_id")
-    else:
-        changed_ids = materialize(cur.select("conv_id"))
-        gone_ids = spark.createDataFrame([], changed_ids.schema)
-        n_changed = changed_ids.count()
-        n_gone = 0
-    has_docs = has_parquet_files(spark, p["docs"])
-    if n_changed == 0 and n_gone == 0:
-        total = spark.read.parquet(p["docs"]).count() if has_docs else 0
-        return {
-            "bootstrap": not has_state,
-            "changed_convs": 0,
-            "removed_convs": 0,
-            "convs_total": total,
-        }
-
-    # the delta-sized work: assemble ONLY the changed conversations.
-    # Broadcast the key set when small so the semi-join never shuffles
-    # the corpus (same shape as the extraction tick's changed-keys join).
-    keys = changed_ids.withColumnRenamed("conv_id", conv_col)
-    if n_changed <= 100_000:
-        keys = F.broadcast(keys)
-    delta_turns = corpus.join(keys, conv_col, "left_semi")
-    assembled = assemble_conversations(
-        delta_turns,
-        conv_col=conv_col,
-        idx_col=idx_col,
-        role_col=role_col,
-        text_col=text_col,
-        tool_col=tool_col,
-        max_turns=max_turns,
-    ).withColumnRenamed(conv_col, "conv_id")
-    # materialize everything that reads the store paths before the
-    # overwrites below replace them
-    assembled = materialize(
-        assembled.select("conv_id", "doc", "n_turns", "n_chars")
-    )
-
-    retired = changed_ids.unionByName(gone_ids).distinct()
-    _write_meta(p["meta"], params, dirty=True)
-    _upsert(
-        spark, p["docs"],
-        assembled.select(
-            "conv_id", "doc", "n_turns", "n_chars", _db_col("conv_id", store_buckets)
-        ),
-        retired, "conv_id", store_buckets, has_docs,
-        key="conv_id",
-    )
-    _upsert(
-        spark, p["state"],
-        cur.join(changed_ids, "conv_id", "left_semi").select(
-            "conv_id", "conv_sha", _db_col("conv_id", store_buckets)
-        ),
-        retired, "conv_id", store_buckets, has_state,
-        key="conv_id",
-    )
-    _write_meta(p["meta"], params, dirty=False)
-    total = (
-        spark.read.parquet(p["docs"]).count()
-        if has_parquet_files(spark, p["docs"])
-        else 0
-    )
+    if n_changed or n_gone:
+        _commit(spark, table, upserts, gone, "conv_id", params)
     return {
-        "bootstrap": not has_state,
+        "bootstrap": stored is None,
         "changed_convs": n_changed,
         "removed_convs": n_gone,
-        "convs_total": total,
+        "convs_total": _rows(table),
     }

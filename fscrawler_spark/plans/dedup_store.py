@@ -1,50 +1,64 @@
 """Persisted near-dup store under an extraction output — the wiring
 that turns functions/incremental_dedup into a steady-state pipeline
 feature: each call diffs the docs table against what was signed last,
-re-signs ONLY the delta, and upserts three small partitioned tables.
+re-signs ONLY the delta, and commits it to one keyed snapshot table.
 
-Layout (under ``<output_dir>/dedup/``):
+Layout: ``<output_dir>/dedup/`` is a SnapshotTable (plans/snapshot_table)
+with one row per doc, keyed by ``id``:
 
-  state/       (id, content_sha, db)   what was signed last tick
-  band_index/  (id, band, bucket, db)  the persisted LSH index
-  clusters/    (id, cluster_id, db)    accumulated assignments
-  _dedup_meta.json                     params fingerprint + dirty marker
+  (id, content_sha, buckets, cluster_id)
 
-``db = pmod(xxhash64(id), store_buckets)`` partitions all three tables
-so an upsert rewrites only the partitions holding touched ids (dynamic
-partition overwrite — the same mechanism as the docs buckets). At 100
-TB swap the three parquet dirs for Iceberg tables and the upserts
-become MERGE INTO; the diff/sign/cluster dataflow is unchanged.
+``content_sha`` is what was signed last tick; ``buckets`` is the doc's
+LSH band index as an array whose position is the band (``_banded`` emits
+exactly ``bands`` rows per doc); ``cluster_id`` is the accumulated
+assignment, NULL for a singleton. A tick derives incremental_near_dup's
+band index with ``posexplode(buckets)`` and its clusters with a
+not-NULL filter.
 
-Safety contract (mirrors the pipeline's manifest guards):
-  * params are fingerprinted — a tick with different (num_hashes,
-    bands, threshold, hash_family, store_buckets) REFUSES instead of
-    silently mixing incompatible signatures.
-  * a dirty marker brackets the multi-table upsert — a tick that finds
-    it refuses (the store may be torn); delete the dedup/ dir to
-    re-bootstrap.
+One commit protocol, the same as the publish and view tables: the first
+tick bootstraps with ``overwrite``; every later tick is ONE
+``apply_delta`` — upserts for the changed docs and for surviving docs
+whose cluster the tick reassigns, deletes for vanished ids. A crash
+anywhere before that commit leaves the previous snapshot current, and
+the next tick redoes the same delta. Safety contract:
+  * params are fingerprinted in the commit summary (STORE_PARAMS_KEY) —
+    a tick with different (num_hashes, bands, threshold, max_bucket,
+    hash_family) REFUSES instead of silently mixing incompatible
+    signatures; compact and rollback carry the fingerprint forward.
   * the per-output job lock serializes against extraction ticks.
 
+Like any snapshot table the store time-travels, serves ``--table-changes``
+(``--table-keys id``), and keeps old snapshots on disk until
+``--table-history --table-expire N --output <out>/dedup`` reclaims them.
+
 The first call auto-bootstraps (everything is a delta), so there is no
-separate build step. Deleted docs: their state/band/cluster rows are
-purged (ghost bands would waste candidates); assignments of SURVIVING
-members of their clusters keep their labels — cluster splits are
-full-sweep territory (see functions/incremental_dedup docstring).
+separate build step. Deleted docs: their rows are purged (ghost bands
+would waste candidates); assignments of SURVIVING members of their
+clusters keep their labels — cluster splits are full-sweep territory
+(see functions/incremental_dedup docstring).
 """
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from fscrawler_spark.functions.incremental_dedup import incremental_near_dup
-from fscrawler_spark.session import dynamic_partition_overwrite, materialize
+from fscrawler_spark.plans.snapshot_table import (
+    DATA_DIR,
+    SNAP_DIR,
+    STORE_PARAMS_KEY,
+    SnapshotTable,
+)
+from fscrawler_spark.session import materialize
 
-_META = "_dedup_meta.json"
-_PARAM_KEYS = ("num_hashes", "bands", "threshold", "max_bucket", "hash_family", "store_buckets")
+STORE_DIR = "dedup"
+# a materialized frame keeps its pre-materialization size estimate, so
+# the planner cannot see that a tick's key sets are delta-sized: sets up
+# to this many rows ride their joins as explicit broadcasts
+_BROADCAST_ROWS = 100_000
 # bump when the signature math changes (band rows become incomparable):
 # 2 = the 2^31-1 permutation-modulus fix. Rides the params fingerprint,
 # so a store signed under the old math refuses loudly instead of
@@ -52,114 +66,108 @@ _PARAM_KEYS = ("num_hashes", "bands", "threshold", "max_bucket", "hash_family", 
 _SIG_VERSION = 2
 
 
-def _paths(output_dir: str) -> dict[str, str]:
-    root = os.path.join(output_dir, "dedup")
-    return {
-        "root": root,
-        "state": os.path.join(root, "state"),
-        "band_index": os.path.join(root, "band_index"),
-        "clusters": os.path.join(root, "clusters"),
-        "meta": os.path.join(root, _META),
-    }
+def legacy_layout(root: str) -> bool:
+    """True when ``root`` holds no committed snapshot but files the table
+    format does not write — the retired partitioned store layout. A
+    crashed first commit leaves only data/ and _stage-*, which the
+    bootstrap simply overwrites."""
+    if not os.path.isdir(root) or SnapshotTable(root).exists():
+        return False
+    return any(
+        n not in (SNAP_DIR, DATA_DIR) and not n.startswith("_stage-")
+        for n in os.listdir(root)
+    )
 
 
-def _db_col(id_col: str, store_buckets: int):
-    return F.pmod(F.xxhash64(F.col(id_col)), F.lit(store_buckets)).cast("int").alias("db")
-
-
-def _load_meta(meta_path: str) -> dict | None:
-    if not os.path.exists(meta_path):
-        return None
-    with open(meta_path) as f:
-        return json.load(f)
-
-
-def _check_meta(meta_path: str, params: dict, root: str, noun: str, dirname: str) -> None:
-    """Shared store-safety gate (dedup + assembly stores): refuse a dirty
-    store (a prior tick died mid-upsert — it may be torn) and refuse
-    params drift (mixing incompatible rows would corrupt silently)."""
-    meta = _load_meta(meta_path)
-    if meta is None:
-        return
-    if meta.get("dirty"):
+def _open_store(root: str, params: dict, noun: str) -> SnapshotTable:
+    """The store table at ``root`` after the gate both stores share:
+    refuse params drift (mixing incompatible rows would corrupt
+    silently) and a legacy layout."""
+    table = SnapshotTable(root)
+    name = os.path.basename(root)
+    if table.exists():
+        have = table.manifest().get(STORE_PARAMS_KEY)
+        if have != params:
+            raise ValueError(
+                f"{noun} store params drifted: store has {have}, tick asked "
+                f"for {params}; delete the {name}/ dir to re-bootstrap with "
+                "the new params"
+            )
+    elif legacy_layout(root):
         raise RuntimeError(
-            f"{noun} store at {root} is DIRTY (a prior tick died "
-            f"mid-upsert); delete the {dirname}/ dir to re-bootstrap"
+            f"{noun} store at {root} has no snapshot table (the retired "
+            f"partitioned layout); delete the {name}/ dir to re-bootstrap"
         )
-    if meta.get("params") != params:
-        raise ValueError(
-            f"{noun} store params drifted: store has {meta.get('params')}, "
-            f"tick asked for {params}; delete the {dirname}/ dir to "
-            "re-bootstrap with the new params"
+    return table
+
+
+def _docs_table(spark: SparkSession, output_dir: str) -> DataFrame:
+    from fscrawler_spark.operators.deletes import has_parquet_files
+
+    docs_path = os.path.join(output_dir, "docs")
+    if not has_parquet_files(spark, docs_path):
+        raise FileNotFoundError(
+            f"no docs table at {docs_path} — run run_extraction_job first"
         )
+    return spark.read.parquet(docs_path)
 
 
-def _write_meta(meta_path: str, params: dict, dirty: bool) -> None:
-    os.makedirs(os.path.dirname(meta_path), exist_ok=True)
-    tmp = meta_path + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump({"params": params, "dirty": dirty}, f)
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp, meta_path)
+def _small(df: DataFrame, n_rows: int) -> DataFrame:
+    return F.broadcast(df) if n_rows <= _BROADCAST_ROWS else df
 
 
-def _upsert(
+def _content_diff(
+    cur: DataFrame, stored: DataFrame | None, key: str, sha: str
+) -> tuple[DataFrame, DataFrame | None, int, int]:
+    """(changed (key, sha), gone (key) or None when nothing vanished,
+    n_changed, n_gone) of ``cur`` against the stored (key, sha): ONE
+    full-outer join, materialized delta-sized, and ONE aggregate for both
+    counts. A key is CHANGED when present in cur without an equal stored
+    sha, GONE when only stored. ``stored=None`` (bootstrap) makes every
+    key changed. ``sha`` must never be NULL in ``cur``."""
+    if stored is None:
+        changed = materialize(cur)
+        return changed, None, changed.count(), 0
+    gone_f = F.col(sha).isNull()
+    diff = materialize(
+        cur.join(stored.select(key, F.col(sha).alias("_stored")), key, "full_outer")
+        .filter(gone_f | ~F.col(sha).eqNullSafe(F.col("_stored")))
+        .select(key, sha, gone_f.alias("_gone"))
+    )
+    counts = diff.agg(
+        F.count(F.lit(1)).alias("n"), F.sum(F.col("_gone").cast("long")).alias("g")
+    ).first()
+    n_gone = int(counts["g"] or 0)
+    return (
+        diff.filter(~F.col("_gone")).select(key, sha),
+        diff.filter(F.col("_gone")).select(key) if n_gone else None,
+        int(counts["n"]) - n_gone,
+        n_gone,
+    )
+
+
+def _commit(
     spark: SparkSession,
-    path: str,
-    delta: DataFrame | None,
-    retired_ids: DataFrame,
-    id_col: str,
-    store_buckets: int,
-    exists: bool,
-    key: str = "id",
+    table: SnapshotTable,
+    upserts: DataFrame | None,
+    deletes: DataFrame | None,
+    key: str,
+    params: dict,
 ) -> None:
-    """Partition-scoped upsert: within the ``db`` partitions holding any
-    retired id, keep rows whose id is NOT retired, add the delta rows,
-    and dynamic-overwrite only those partitions. The merged content is
-    materialized first — Spark refuses to overwrite a path it is
-    reading, and the touched partitions are delta-proportional.
-    ``key`` names the id column IN THE STORED TABLE (the assembly store
-    keeps its user-facing conv_id name; the dedup tables use 'id')."""
-    retired = retired_ids.select(F.col(id_col).alias(key), _db_col(id_col, store_buckets))
-    merged = delta
-    touched: set[int] = set()
-    if exists:
-        touched = {r["db"] for r in retired.select("db").distinct().collect()}
-        keep = (
-            spark.read.parquet(path)
-            .filter(F.col("db").isin(list(touched)) if touched else F.lit(False))
-            .join(F.broadcast(retired.select(key)), key, "left_anti")
+    """The tick's ONE atomic commit: a clustered overwrite bootstraps,
+    every later tick is one stats-pruned apply_delta."""
+    extra = {STORE_PARAMS_KEY: params}
+    if table.exists():
+        table.apply_delta(
+            spark, upserts, deletes, keys=(key,), stat_cols=(key,), extra=extra
         )
-        merged = keep if merged is None else merged.unionByName(keep)
-    if merged is None:
-        return
-    merged = materialize(merged)
-    written: set[int] = set()
-    if merged.head(1):
-        # force dynamic mode: under Spark's default 'static' a partitioned
-        # overwrite drops EVERY existing partition, not just the written
-        # ones — a caller-supplied session must not decide that
-        with dynamic_partition_overwrite(spark):
-            merged.write.mode("overwrite").partitionBy("db").parquet(path)
-        written = {r["db"] for r in merged.select("db").distinct().collect()}
-    # an all-retired merge writes NOTHING (an empty overwrite would
-    # leave a footer-less dir that poisons every later read) — the
-    # emptied-partition sweep below does the whole purge
-    # dynamic overwrite replaces only partitions PRESENT in the write: a
-    # touched partition whose every row was retired gets no file and
-    # would keep its stale rows (ghost state desynchronizes the three
-    # tables — a re-added doc could look signed while its bands are
-    # gone). Remove emptied partition dirs explicitly.
-    emptied = touched - written
-    if emptied:
-        from fscrawler_spark.operators.deletes import _fs_for
+    else:
+        table.overwrite(spark, upserts, stat_cols=(key,), cluster_by=(key,), extra=extra)
 
-        HPath, fs = _fs_for(spark, path)
-        for db in sorted(emptied):
-            hp = HPath(f"{path}/db={db}")
-            if fs.exists(hp):
-                fs.delete(hp, True)
+
+def _rows(table: SnapshotTable) -> int:
+    """Row count off the manifest — no Spark job."""
+    return sum(e.rows for e in table.files()) if table.exists() else 0
 
 
 def dedup_tick(
@@ -173,12 +181,11 @@ def dedup_tick(
     threshold: float = 0.8,
     max_bucket: int | None = 1000,
     hash_family: str = "fast",
-    store_buckets: int = 32,
 ) -> dict:
     """One dedup tick over ``corpus`` (default: the docs table at
     ``output_dir``). Signs/banded-indexes only docs whose content sha
     changed since the last tick, clusters them against the persisted
-    store, and upserts state/band_index/clusters in place. Returns
+    store, and commits the result as one snapshot. Returns
     ``{bootstrap, delta_docs, removed_docs, assignments_upserted,
     verified_pairs, clusters_total}``. The first call over a fresh
     output IS the bootstrap (delta = everything).
@@ -192,7 +199,7 @@ def dedup_tick(
     with _JobLock(output_dir, "dedup-tick"):
         return _dedup_tick_impl(
             spark, output_dir, corpus, id_col, text_col, num_hashes,
-            bands, threshold, max_bucket, hash_family, store_buckets,
+            bands, threshold, max_bucket, hash_family,
         )
 
 
@@ -207,124 +214,86 @@ def _dedup_tick_impl(
     threshold: float,
     max_bucket: int | None,
     hash_family: str,
-    store_buckets: int,
 ) -> dict:
-    from fscrawler_spark.operators.deletes import has_parquet_files
-
-    p = _paths(output_dir)
     params = {
-        k: v
-        for k, v in zip(
-            _PARAM_KEYS,
-            (num_hashes, bands, threshold, max_bucket, hash_family, store_buckets),
-        )
+        "num_hashes": num_hashes,
+        "bands": bands,
+        "threshold": threshold,
+        "max_bucket": max_bucket,
+        "hash_family": hash_family,
+        "sig_version": _SIG_VERSION,
     }
-    params["sig_version"] = _SIG_VERSION
-    _check_meta(p["meta"], params, p["root"], "dedup", "dedup")
+    table = _open_store(os.path.join(output_dir, STORE_DIR), params, "dedup")
     if corpus is None:
-        docs_path = os.path.join(output_dir, "docs")
-        if not has_parquet_files(spark, docs_path):
-            raise FileNotFoundError(
-                f"no docs table at {docs_path} — run run_extraction_job first"
-            )
-        corpus = spark.read.parquet(docs_path)
+        corpus = _docs_table(spark, output_dir)
 
-    # content diff vs the signed state: sha never NULL so the anti-join
-    # can't leak null-text docs past the delta
+    # content diff vs the signed state: sha never NULL so the diff can't
+    # leak null-text docs past the delta
     cur = corpus.select(
         F.col(id_col).alias("id"),
         F.coalesce(F.sha2(F.col(text_col).cast("string"), 256), F.lit("<null>")).alias(
             "content_sha"
         ),
     )
-    has_state = has_parquet_files(spark, p["state"])
-    if has_state:
-        state = spark.read.parquet(p["state"]).select("id", "content_sha")
-        delta_ids = materialize(
-            cur.join(state, ["id", "content_sha"], "left_anti").select("id")
+    stored = table.read(spark) if table.exists() else None
+    changed, gone, n_delta, n_gone = _content_diff(cur, stored, "id", "content_sha")
+    n_pairs = n_assign = 0
+    upserts = None
+    if n_delta:
+        band_index = clusters = live = None
+        if stored is not None:
+            # vanished docs leave the store this tick: they must neither
+            # probe as candidates nor be relabeled back in as bystanders
+            live = stored
+            if gone is not None:
+                live = stored.join(_small(gone, n_gone), "id", "left_anti")
+            band_index = live.select("id", F.posexplode("buckets").alias("band", "bucket"))
+            clusters = live.filter(F.col("cluster_id").isNotNull()).select(
+                "id", "cluster_id"
+            )
+        changed_docs = corpus.join(
+            _small(changed.select(F.col("id").alias(id_col)), n_delta), id_col, "left_semi"
         )
-        gone_ids = materialize(
-            state.select("id").join(cur.select("id"), "id", "left_anti")
+        res = incremental_near_dup(
+            changed_docs, corpus, band_index, clusters,
+            id_col=id_col, text_col=text_col, num_hashes=num_hashes,
+            bands=bands, threshold=threshold, max_bucket=max_bucket,
+            hash_family=hash_family,
         )
-    else:
-        delta_ids = materialize(cur.select("id"))
-        gone_ids = spark.createDataFrame([], delta_ids.schema)
-    n_delta = delta_ids.count()
-    n_gone = gone_ids.count()
-    if n_delta == 0 and n_gone == 0:
-        clusters_total = (
-            spark.read.parquet(p["clusters"]).count()
-            if has_parquet_files(spark, p["clusters"])
-            else 0
+        assignments = materialize(res["assignments"].select("id", "cluster_id"))
+        n_pairs = res["verified_pairs"].count()
+        n_assign = assignments.count()
+        assigned = _small(assignments, n_assign)
+        buckets = (
+            res["band_delta"]
+            .groupBy("id")
+            .agg(F.sort_array(F.collect_list(F.struct("band", "bucket"))).alias("_b"))
+            .select("id", F.col("_b.bucket").alias("buckets"))
         )
-        return {
-            "bootstrap": not has_state,
-            "delta_docs": 0,
-            "removed_docs": 0,
-            "assignments_upserted": 0,
-            "verified_pairs": 0,
-            "clusters_total": clusters_total,
-        }
-
-    changed_docs = corpus.join(
-        delta_ids.withColumnRenamed("id", id_col), id_col, "left_semi"
-    )
-    has_bands = has_parquet_files(spark, p["band_index"])
-    has_clusters = has_parquet_files(spark, p["clusters"])
-    band_index = (
-        spark.read.parquet(p["band_index"]).select("id", "band", "bucket")
-        if has_bands
-        else None
-    )
-    clusters = (
-        spark.read.parquet(p["clusters"]).select("id", "cluster_id")
-        if has_clusters
-        else None
-    )
-    res = incremental_near_dup(
-        changed_docs, corpus, band_index, clusters,
-        id_col=id_col, text_col=text_col, num_hashes=num_hashes,
-        bands=bands, threshold=threshold, max_bucket=max_bucket,
-        hash_family=hash_family,
-    )
-    # materialize EVERYTHING that reads the store paths before any
-    # overwrite below replaces them
-    assignments = materialize(res["assignments"].select("id", "cluster_id"))
-    band_delta = materialize(res["band_delta"])
-    n_pairs = res["verified_pairs"].count()
-    n_assign = assignments.count()
-
-    retired = delta_ids.unionByName(gone_ids).distinct()
-    _write_meta(p["meta"], params, dirty=True)
-    _upsert(
-        spark, p["state"],
-        cur.join(delta_ids, cur.id == delta_ids.id, "left_semi").select(
-            "id", "content_sha", _db_col("id", store_buckets)
-        ),
-        retired, "id", store_buckets, has_state,
-    )
-    _upsert(
-        spark, p["band_index"],
-        band_delta.select("id", "band", "bucket", _db_col("id", store_buckets)),
-        retired, "id", store_buckets, has_bands,
-    )
-    _upsert(
-        spark, p["clusters"],
-        assignments.select("id", "cluster_id", _db_col("id", store_buckets)),
-        # delta_ids must retire too: a CHANGED doc whose new text is a
-        # singleton gets NO assignments row, and without retirement its
-        # stale cluster membership would survive the tick
-        assignments.select("id").unionByName(delta_ids).unionByName(gone_ids).distinct(),
-        "id", store_buckets, has_clusters,
-    )
-    _write_meta(p["meta"], params, dirty=False)
+        signed = changed.join(buckets, "id", "left")
+        if live is not None:
+            # surviving docs the tick relabels keep their signature
+            signed = signed.unionByName(
+                live.select("id", "content_sha", "buckets")
+                .join(assigned, "id", "left_semi")
+                .join(_small(changed, n_delta), "id", "left_anti")
+            )
+        # a changed doc absent from assignments is now a singleton: its
+        # cluster_id goes NULL
+        upserts = materialize(
+            signed.join(assigned, "id", "left").select(
+                "id", "content_sha", "buckets", "cluster_id"
+            )
+        )
+    if n_delta or n_gone:
+        _commit(spark, table, upserts, gone, "id", params)
     clusters_total = (
-        spark.read.parquet(p["clusters"]).count()
-        if has_parquet_files(spark, p["clusters"])
+        table.read(spark).filter(F.col("cluster_id").isNotNull()).count()
+        if table.exists()
         else 0
     )
     return {
-        "bootstrap": not has_state,
+        "bootstrap": stored is None,
         "delta_docs": n_delta,
         "removed_docs": n_gone,
         "assignments_upserted": n_assign,

@@ -341,164 +341,47 @@ def check_output(spark: SparkSession, output_dir: str) -> dict:
                     )
                 )
 
-    # --- dedup store (plans/dedup_store) ---------------------------------
-    from fscrawler_spark.plans.dedup_store import _SIG_VERSION
-    from fscrawler_spark.plans.dedup_store import _paths as dedup_paths
+    # --- keyed stores (plans/dedup_store, plans/assembly_store) ----------
+    from fscrawler_spark.plans import assembly_store, dedup_store
+    from fscrawler_spark.plans.snapshot_table import STORE_PARAMS_KEY, SnapshotTable
 
-    dp = dedup_paths(output_dir)
-    if os.path.isdir(dp["root"]):
-        dmeta = None
-        if not os.path.exists(dp["meta"]):
+    for store, noun, version_key, version, stale_code, what in (
+        (dedup_store.STORE_DIR, "dedup", "sig_version", dedup_store._SIG_VERSION,
+         "dedup_sig_stale", "signed under an older signature scheme"),
+        (assembly_store.STORE_DIR, "assembly", "asm_version",
+         assembly_store._ASM_VERSION, "assembly_version_stale",
+         "rendered under an older template version"),
+    ):
+        root = os.path.join(output_dir, store)
+        if dedup_store.legacy_layout(root):
             findings.append(
                 _finding(
                     "WARN",
-                    "dedup_meta_missing",
-                    "dedup/ exists without _dedup_meta.json — not a store "
-                    "this engine wrote (or torn before bootstrap); delete "
-                    "the dir to re-bootstrap",
+                    f"{noun}_legacy_layout",
+                    f"{store}/ holds no snapshot table (the retired "
+                    "partitioned layout, or not a store this engine wrote) "
+                    f"— ticks refuse; delete the {store}/ dir to re-bootstrap",
                 )
             )
-        else:
-            try:
-                with open(dp["meta"]) as f:
-                    dmeta = json.load(f)
-                if not isinstance(dmeta, dict):
-                    raise ValueError("dedup meta is not an object")
-            except (OSError, ValueError):
-                dmeta = None
-                findings.append(
-                    _finding(
-                        "ERROR",
-                        "corrupt_dedup_meta",
-                        "dedup/_dedup_meta.json is unreadable — ticks will "
-                        "refuse; delete the dedup/ dir to re-bootstrap",
-                    )
-                )
-        if isinstance(dmeta, dict):
-            if dmeta.get("dirty"):
-                findings.append(
-                    _finding(
-                        "ERROR",
-                        "dedup_store_dirty",
-                        "dedup store is DIRTY (a tick died mid-upsert; the "
-                        "three tables may be torn) — delete the dedup/ dir "
-                        "to re-bootstrap",
-                    )
-                )
-            elif (dmeta.get("params") or {}).get("sig_version") != _SIG_VERSION:
-                findings.append(
-                    _finding(
-                        "WARN",
-                        "dedup_sig_stale",
-                        "dedup store was signed under an older signature "
-                        "scheme — the next tick refuses; delete the dedup/ "
-                        "dir to re-sign",
-                    )
-                )
-            elif has_parquet_files(spark, dp["state"]):
-                # clean store: every band/cluster id must be a signed id
-                # (a violation means a torn multi-table upsert the dirty
-                # marker somehow missed)
-                state_ids = spark.read.parquet(dp["state"]).select("id")
-                for tbl in ("band_index", "clusters"):
-                    if not has_parquet_files(spark, dp[tbl]):
-                        continue
-                    orphans = (
-                        spark.read.parquet(dp[tbl])
-                        .select("id")
-                        .distinct()
-                        .join(state_ids, "id", "left_anti")
-                        .count()
-                    )
-                    if orphans:
-                        findings.append(
-                            _finding(
-                                "ERROR",
-                                f"dedup_orphan_{tbl}",
-                                f"{orphans} id(s) in dedup/{tbl} have no "
-                                "state row — torn upsert; delete the dedup/ "
-                                "dir to re-bootstrap",
-                            )
-                        )
-
-    # --- assembly store (plans/assembly_store) ---------------------------
-    from fscrawler_spark.plans.assembly_store import _ASM_VERSION
-    from fscrawler_spark.plans.assembly_store import _paths as asm_paths
-
-    ap = asm_paths(output_dir)
-    if os.path.isdir(ap["root"]):
-        ameta = None
-        if not os.path.exists(ap["meta"]):
+            continue
+        findings.extend(
+            dict(f, message=f"{store}/: {f['message']}")
+            for f in check_snapshot_table(root)
+        )
+        t = SnapshotTable(root)
+        try:
+            params = t.manifest().get(STORE_PARAMS_KEY) if t.exists() else None
+        except (OSError, ValueError):
+            continue  # an unreadable manifest is check_snapshot_table's finding
+        if params is not None and params.get(version_key) != version:
             findings.append(
                 _finding(
                     "WARN",
-                    "assembly_meta_missing",
-                    "assembled/ exists without _assembly_meta.json — not a "
-                    "store this engine wrote (or torn before bootstrap); "
-                    "delete the dir to re-bootstrap",
+                    stale_code,
+                    f"{noun} store was {what} — the next tick refuses; "
+                    f"delete the {store}/ dir to rebuild it",
                 )
             )
-        else:
-            try:
-                with open(ap["meta"]) as f:
-                    ameta = json.load(f)
-                if not isinstance(ameta, dict):
-                    raise ValueError("assembly meta is not an object")
-            except (OSError, ValueError):
-                ameta = None
-                findings.append(
-                    _finding(
-                        "ERROR",
-                        "corrupt_assembly_meta",
-                        "assembled/_assembly_meta.json is unreadable — ticks "
-                        "will refuse; delete the assembled/ dir to "
-                        "re-bootstrap",
-                    )
-                )
-        if isinstance(ameta, dict):
-            if ameta.get("dirty"):
-                findings.append(
-                    _finding(
-                        "ERROR",
-                        "assembly_store_dirty",
-                        "assembly store is DIRTY (a tick died mid-upsert; "
-                        "docs/state may be torn) — delete the assembled/ "
-                        "dir to re-bootstrap",
-                    )
-                )
-            elif (ameta.get("params") or {}).get("asm_version") != _ASM_VERSION:
-                findings.append(
-                    _finding(
-                        "WARN",
-                        "assembly_version_stale",
-                        "assembly store was rendered under an older template "
-                        "version — the next tick refuses; delete the "
-                        "assembled/ dir to re-render",
-                    )
-                )
-            elif has_parquet_files(spark, ap["state"]) and has_parquet_files(
-                spark, ap["docs"]
-            ):
-                # clean store: docs and state must cover the SAME
-                # conversations (either direction dangling means a torn
-                # two-table upsert the dirty marker somehow missed)
-                s_ids = spark.read.parquet(ap["state"]).select("conv_id")
-                d_ids = spark.read.parquet(ap["docs"]).select("conv_id")
-                for label, a, b in (
-                    ("docs_without_state", d_ids, s_ids),
-                    ("state_without_docs", s_ids, d_ids),
-                ):
-                    dangling = a.distinct().join(b, "conv_id", "left_anti").count()
-                    if dangling:
-                        findings.append(
-                            _finding(
-                                "ERROR",
-                                f"assembly_{label}",
-                                f"{dangling} conv_id(s) dangle "
-                                f"({label.replace('_', ' ')}) — torn upsert; "
-                                "delete the assembled/ dir to re-bootstrap",
-                            )
-                        )
 
     # --- export root (functions/export) -----------------------------------
     shards_dir = os.path.join(output_dir, "shards")

@@ -41,7 +41,11 @@ from fscrawler_spark.operators.extract import extract_transcripts
 from fscrawler_spark.operators.stats import parse_failure_flag
 from fscrawler_spark.plans.checkpoint import CheckpointManifest
 from fscrawler_spark.session import dynamic_partition_overwrite, materialize
-from fscrawler_spark.sources.transcripts import SNAP_INPUT_PREFIX, parse_snap_input
+from fscrawler_spark.sources.transcripts import (
+    SNAP_INPUT_PREFIX,
+    parse_snap_input,
+    read_transcripts,
+)
 
 # rebuild-path anti-join key sets broadcast below this many keys
 # (~50 B/key ⇒ ≲100 MB executor-side at the cap); above it the delta is
@@ -66,16 +70,6 @@ LINEAGE_SCHEMA = (
     "bytes_in bigint, bytes_out bigint, parse_failures bigint, needs_ocr bigint, "
     "span_count bigint"
 )
-
-
-def read_transcripts(spark: SparkSession, path: str) -> DataFrame:
-    """Delegates to the validated source reader: the preflight the CLI
-    dry-run performs (SchemaError on missing columns, cast projection)
-    must be the SAME read path the real job takes, or the dry-run
-    checks a road the job never drives."""
-    from fscrawler_spark.sources.transcripts import read_transcripts as _read
-
-    return _read(spark, path)
 
 
 # scheme-agnostic parquet-file probe, shared with apply_deletes' emptied-

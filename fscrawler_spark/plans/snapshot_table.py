@@ -55,6 +55,8 @@ from typing import Iterable, Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from fscrawler_spark.session import materialize
+
 SNAP_DIR = "_snap"
 DATA_DIR = "data"
 _V_RE = re.compile(r"^v(\d{8})\.json$")
@@ -80,11 +82,19 @@ class SchemaRewriteError(ValueError):
     snapshots separately (derived-table syncs re-bootstrap on this)."""
 
 
-# summary keys the derived-table sync (plans/derived) stamps on every
-# view commit; defined HERE so row-preserving maintenance commits
-# (compact, rollback) can carry them forward without importing the
-# derived module (which imports this one)
-DERIVED_CURSOR_KEYS = ("derived_of_root", "derived_of_uuid", "derived_from_snapshot")
+# summary keys that say what a table's rows were derived from: the
+# derived-table sync cursor (plans/derived) and the keyed stores' params
+# fingerprint (plans/dedup_store, plans/assembly_store), stamped on
+# every such commit. Defined HERE so row-preserving maintenance commits
+# (compact, rollback) carry them forward without importing the modules
+# that stamp them (which import this one)
+STORE_PARAMS_KEY = "store_params"
+DERIVED_CURSOR_KEYS = (
+    "derived_of_root",
+    "derived_of_uuid",
+    "derived_from_snapshot",
+    STORE_PARAMS_KEY,
+)
 
 
 class SnapshotIntegrityError(RuntimeError):
@@ -337,29 +347,38 @@ def _widen_null_flags(a: T.DataType, b: T.DataType) -> T.DataType:
     return a
 
 
-def _needs_canon(dt: T.DataType) -> bool:
+def _needs_canon(dt: T.DataType, maps_only: bool = False) -> bool:
     """True when a value of this type can be logically equal but
-    binary-unequal — i.e. it contains a map anywhere (Spark maps carry
+    binary-unequal: it contains a map anywhere (Spark maps carry
     insertion order, and parquet round-trips it, so the same logical map
-    can surface with entries in different orders)."""
+    can surface with entries in different orders), or a float/double
+    (-0.0 equals 0.0 under SQL equality but serializes with its sign).
+    ``maps_only`` asks the key-column question: floats join fine, maps
+    cannot join at all."""
     if isinstance(dt, T.MapType):
         return True
+    if isinstance(dt, (T.FloatType, T.DoubleType)):
+        return not maps_only
     if isinstance(dt, T.ArrayType):
-        return _needs_canon(dt.elementType)
+        return _needs_canon(dt.elementType, maps_only)
     if isinstance(dt, T.StructType):
-        return any(_needs_canon(f.dataType) for f in dt.fields)
+        return any(_needs_canon(f.dataType, maps_only) for f in dt.fields)
     return False
 
 
 def _canon_expr(col, dt: T.DataType):
-    """Order-canonical comparison form of ``col``: every map at any
-    nesting depth becomes its ``array_sort(map_entries(...))`` — a
-    comparable type (Spark refuses equality on MapType outright) with a
-    deterministic entry order. Non-map-bearing subtrees pass through
+    """Canonical comparison form of ``col``: every map at any nesting
+    depth becomes its ``array_sort(map_entries(...))`` — a comparable
+    type (Spark refuses equality on MapType outright) with a
+    deterministic entry order — and every float/double becomes ``col +
+    0.0``, which maps -0.0 to 0.0 and leaves every other value (NaN and
+    NULL included) as it was. Subtrees with neither pass through
     untouched, so the expression stays a pure codegen projection and a
-    no-op for map-free columns."""
+    no-op for such columns."""
     from pyspark.sql import functions as F
 
+    if isinstance(dt, (T.FloatType, T.DoubleType)):
+        return col + F.lit(0.0).cast(dt)
     if isinstance(dt, T.MapType):
         entries = F.map_entries(col)
         if _needs_canon(dt.keyType) or _needs_canon(dt.valueType):
@@ -672,7 +691,8 @@ class SnapshotTable:
         files; the keyed join cancels them (a key present on both sides
         with equal non-key values emits nothing), so a compaction-only
         range yields an EMPTY changelog. Map-typed fields compare by
-        canonical sorted-entry form (_canon_expr), not binary layout.
+        canonical sorted-entry form and floats with -0.0 == 0.0
+        (_canon_expr), not by binary layout.
 
         Net semantics over multi-commit ranges fall out of diffing the
         ENDPOINT manifests: a row inserted then deleted inside the range
@@ -749,7 +769,7 @@ class SnapshotTable:
                 raise ValueError(
                     f"key column(s) {missing} not in table schema {cols}"
                 )
-            unjoinable = [k for k in keys if _needs_canon(by_name[k])]
+            unjoinable = [k for k in keys if _needs_canon(by_name[k], maps_only=True)]
             if unjoinable:
                 raise ValueError(
                     f"key column(s) {unjoinable} contain map types — not "
@@ -789,18 +809,18 @@ class SnapshotTable:
         # appear/vanish) come out of the join as a delta-sized key set;
         # their full values are then fetched by re-reading the SAME
         # diffed files with a keyed join per side — payload bytes never
-        # ride the comparison shuffle. Map-bearing columns hash via
-        # their canonical sorted-entry form (_canon_expr), so map
-        # layout never fakes a change. "Unchanged" is hash equality
-        # over 128 independent bits: a type-aware xxhash64 (SQL-equality
-        # normalized for float specials) plus an xxhash64 over a
-        # null-structure-EXPLICIT canonical JSON serialization — the
-        # type-aware stream alone skips null inputs at every nesting
-        # level (NULL struct == struct of NULLs, [1,NULL,2] == [1,2]),
-        # which the JSON stream keeps distinct. Miss probability per
-        # changed row ~2^-64-and-then-some — the same checksum-equality
-        # contract the extraction tick's change detection (sha256) has
-        # always used.
+        # ride the comparison shuffle. Map- and float-bearing columns
+        # hash via their canonical form (_canon_expr), so neither map
+        # layout nor a 0.0 -> -0.0 rewrite fakes a change. "Unchanged"
+        # is hash equality over 128 independent bits: a type-aware
+        # xxhash64 (SQL-equality normalized for float specials) plus an
+        # xxhash64 over a null-structure-EXPLICIT canonical JSON
+        # serialization — the type-aware stream alone skips null inputs
+        # at every nesting level (NULL struct == struct of NULLs,
+        # [1,NULL,2] == [1,2]), which the JSON stream keeps distinct.
+        # Miss probability per changed row ~2^-64-and-then-some — the
+        # same checksum-equality contract the extraction tick's change
+        # detection (sha256) has always used.
         canon_cols = [c for c in nonkeys if _needs_canon(by_name[c])]
 
         def hash_inputs():
@@ -846,13 +866,11 @@ class SnapshotTable:
             .when(unchanged, F.lit(None).cast("string"))
             .otherwise(F.lit("update"))
         )
-        keyed = (
-            j.select(*keys, kind.alias("_kind"))
-            .filter(F.col("_kind").isNotNull())
-            # delta-sized by construction; materialized so the two
-            # payload-attach joins below don't re-run the slim join (and
-            # so AQE sees its true—small—size)
-            .localCheckpoint()
+        # delta-sized by construction; materialized so the two
+        # payload-attach joins below don't re-run the slim join (and so
+        # AQE sees its true—small—size)
+        keyed = materialize(
+            j.select(*keys, kind.alias("_kind")).filter(F.col("_kind").isNotNull())
         )
         if not nonkeys:
             return keyed.select(
@@ -1296,9 +1314,10 @@ class SnapshotTable:
         parent = self.current_id()
         if to_snapshot_id == parent:
             return parent  # no-op: already current
-        # a derived table rolls its sync cursor back WITH its contents:
-        # the target snapshot's cursor (if any) matches the reverted data,
-        # so later syncs replay from there instead of refusing
+        # a derived table rolls its sync cursor (a store its params) back
+        # WITH its contents: the target snapshot's cursor (if any) matches
+        # the reverted data, so later syncs replay from there instead of
+        # refusing
         extra = {"rolled_back_to": to_snapshot_id}
         extra.update({k: m[k] for k in DERIVED_CURSOR_KEYS if k in m})
         return self._commit(
@@ -1329,9 +1348,10 @@ class SnapshotTable:
         — a no-op ({"rewritten": 0, ...}) when fewer than two files are
         below the threshold (rewriting one file alone shrinks nothing).
 
-        A derived table's sync cursor (DERIVED_CURSOR_KEYS) is carried
-        forward: compaction is row-preserving, so routine maintenance
-        must not evict the cursor and force a corpus-scale re-bootstrap.
+        A derived table's sync cursor and a store's params
+        (DERIVED_CURSOR_KEYS) are carried forward: compaction is
+        row-preserving, so routine maintenance must not evict them and
+        force a corpus-scale re-bootstrap.
         (If a sync commits concurrently, the carried cursor can be one
         sync STALE — harmless: replaying an already-applied changelog
         range is idempotent by keyed-upsert construction.)

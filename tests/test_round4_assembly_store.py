@@ -1,6 +1,7 @@
 """Incremental assembly store (plans/assembly_store.py): bootstrap ==
 one-shot assembly, no-op ticks, per-conversation delta re-assembly,
-deletion purge, fingerprint stability, and the drift/dirty refusals —
+deletion purge, fingerprint stability, the drift/legacy refusals and
+crash atomicity of the one-commit tick —
 all value-checked against one-shot assemble_conversations over the
 current corpus (the store must be indistinguishable from a full rebuild
 after ANY tick sequence).
@@ -8,6 +9,7 @@ after ANY tick sequence).
 
 import json
 import os
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -17,6 +19,7 @@ from fscrawler_spark.plans.assembly_store import (
     assembly_tick,
     conversation_fingerprints,
 )
+from fscrawler_spark.plans.snapshot_table import SnapshotTable
 
 SCHEMA = "conv_id string, turn_idx int, role string, extracted string"
 
@@ -37,7 +40,7 @@ def _write_output(spark, tmp_path, df):
 
 
 def _store_docs(spark, out):
-    return spark.read.parquet(os.path.join(out, "assembled", "docs"))
+    return SnapshotTable(os.path.join(out, "assembled")).read(spark)
 
 
 def _oneshot(df):
@@ -94,9 +97,8 @@ def test_change_reassembles_only_touched_convs(spark, tmp_path):
     assert res["convs_total"] == 5
     assert _stored(spark, out) == _oneshot(v2)
     assert "EDITED" in _stored(spark, out)["c2"][0]
-    # state table purged too: re-adding c5 later must re-assemble it
-    state = spark.read.parquet(os.path.join(out, "assembled", "state"))
-    assert state.filter("conv_id = 'c5'").count() == 0
+    # its fingerprint went with its row: re-adding c5 must re-assemble it
+    assert _store_docs(spark, out).filter("conv_id = 'c5'").count() == 0
     _write_output(spark, tmp_path, v1)
     res3 = assembly_tick(spark, out)
     assert res3["changed_convs"] == 3  # c2 + c4 revert, c5 reappears
@@ -146,19 +148,20 @@ def test_fingerprint_partition_stable_and_null_safe(spark):
     assert other["c"] != base["c"] and other["d"] == base["d"]
 
 
-def test_params_drift_and_dirty_refusals(spark, tmp_path):
+def test_params_drift_and_legacy_refusals(spark, tmp_path):
     v1 = _corpus_v1(spark)
     out = _write_output(spark, tmp_path, v1)
     assembly_tick(spark, out, max_turns=None)
     with pytest.raises(ValueError, match="drifted"):
         assembly_tick(spark, out, max_turns=2)
-    meta = os.path.join(out, "assembled", "_assembly_meta.json")
-    with open(meta) as f:
-        m = json.load(f)
-    m["dirty"] = True
-    with open(meta, "w") as f:
-        json.dump(m, f)
-    with pytest.raises(RuntimeError, match="DIRTY"):
+    # the retired partitioned layout (meta JSON + state/ + docs/, no
+    # _snap/) refuses with the delete-to-re-bootstrap remedy
+    legacy = os.path.join(out, "assembled")
+    shutil.rmtree(legacy)
+    os.makedirs(os.path.join(legacy, "state"))
+    with open(os.path.join(legacy, "_assembly_meta.json"), "w") as f:
+        json.dump({"params": {}}, f)
+    with pytest.raises(RuntimeError, match="delete the assembled/ dir"):
         assembly_tick(spark, out)
 
 
@@ -187,7 +190,7 @@ def test_cli_assemble_store_standalone_and_composed(spark, tmp_path, capsys):
     assert rc == 0
     res = json.loads(capsys.readouterr().out.strip().splitlines()[-1])["assembled"]
     assert res["bootstrap"] is True and res["convs_total"] > 0
-    docs = spark.read.parquet(os.path.join(out, "assembled", "docs"))
+    docs = _store_docs(spark, out)
     assert docs.count() == res["convs_total"]
 
     # composed with an incremental tick: unchanged input -> no-op store tick
@@ -233,11 +236,12 @@ def test_cli_standalone_ticks_both_stores(spark, tmp_path, capsys):
         assert "need --input" in capsys.readouterr().err
 
 
-def test_doctor_checks_assembly_store(spark, tmp_path):
-    """The output doctor flags a dirty assembly store and docs/state
-    coverage mismatches, and blesses a healthy one."""
+def test_doctor_checks_assembly_store(spark, tmp_path, monkeypatch):
+    """The output doctor runs the snapshot-table checks on the store
+    root, reports a stale render version, and blesses a healthy store."""
     from fscrawler_spark.config import ExtractSettings
     from fscrawler_spark.datagen import generate_transcripts
+    from fscrawler_spark.plans import assembly_store
     from fscrawler_spark.plans.doctor import check_output
     from fscrawler_spark.plans.pipeline import run_extraction_job
 
@@ -248,28 +252,19 @@ def test_doctor_checks_assembly_store(spark, tmp_path):
     assembly_tick(spark, out)
     res = check_output(spark, out)
     assert res["ok"] is True
-    assert not any(c.startswith("assembly") for c in codes(res))
+    assert not any(c.startswith(("assembly", "table")) for c in codes(res))
 
-    # torn upsert: a docs row whose conversation has no state row
-    extra = spark.createDataFrame(
-        [("ghost", "<|u|>\nx", 1, 8, 0)],
-        "conv_id string, doc string, n_turns long, n_chars long, db int",
-    )
-    extra.write.mode("append").partitionBy("db").parquet(
-        os.path.join(out, "assembled", "docs")
-    )
+    # a committer that died mid-publish leaves a torn manifest temp
+    snap = os.path.join(out, "assembled", "_snap")
+    open(os.path.join(snap, ".tmp-torn"), "w").close()
     res = check_output(spark, out)
-    assert "assembly_docs_without_state" in codes(res) and res["ok"] is False
+    torn = [f for f in res["findings"] if f["code"] == "table_torn_manifest_temp"]
+    assert torn and torn[0]["message"].startswith("assembled/")
 
-    # dirty marker
-    meta = os.path.join(out, "assembled", "_assembly_meta.json")
-    with open(meta) as f:
-        m = json.load(f)
-    m["dirty"] = True
-    with open(meta, "w") as f:
-        json.dump(m, f)
+    # a store rendered under an older template version -> WARN only
+    monkeypatch.setattr(assembly_store, "_ASM_VERSION", assembly_store._ASM_VERSION + 1)
     res = check_output(spark, out)
-    assert "assembly_store_dirty" in codes(res) and res["ok"] is False
+    assert "assembly_version_stale" in codes(res) and res["ok"] is True
 
 
 def test_store_tool_param(spark, tmp_path):
@@ -320,3 +315,55 @@ def test_tick_refuses_schema_gaps_cleanly(spark, tmp_path, capsys):
         assembly_tick(spark, out, tool_col="tool")
     assert main(["--output", out, "--assemble-store", "--assemble-tools"],
                 spark=spark) == 2
+
+
+def test_crashed_commit_keeps_previous_snapshot_and_retry_is_exact(
+    spark, tmp_path, monkeypatch
+):
+    from tests.test_round4_dedup_store import crash_first_commit
+
+    v1 = _corpus_v1(spark)
+    v2 = v1.filter(F.col("conv_id") != "c5").withColumn(
+        "extracted",
+        F.when(F.col("conv_id") == "c2", F.lit("EDITED")).otherwise(F.col("extracted")),
+    )
+    ref, out = str(tmp_path / "ref"), str(tmp_path / "out")
+    for o in (ref, out):
+        v1.write.parquet(os.path.join(o, "docs"))
+        assembly_tick(spark, o)
+        v2.write.mode("overwrite").parquet(os.path.join(o, "docs"))
+    want = assembly_tick(spark, ref)
+
+    t = SnapshotTable(os.path.join(out, "assembled"))
+    sid, before = t.current_id(), _stored(spark, out)
+    calls = crash_first_commit(monkeypatch)
+    with pytest.raises(OSError, match="injected"):
+        assembly_tick(spark, out)
+    assert calls == [t.root]
+    assert t.current_id() == sid and _stored(spark, out) == before == _oneshot(v1)
+
+    assert assembly_tick(spark, out) == want
+    rows = lambda o: sorted(tuple(r) for r in _store_docs(spark, o).collect())
+    assert rows(out) == rows(ref) and _stored(spark, out) == _oneshot(v2)
+
+
+def test_compacted_store_keeps_ticking(spark, tmp_path):
+    v1 = _corpus_v1(spark)
+    out = _write_output(spark, tmp_path, v1)
+    assembly_tick(spark, out)
+    v2 = v1.withColumn(
+        "extracted",
+        F.when(F.col("conv_id") == "c1", F.lit("EDITED")).otherwise(F.col("extracted")),
+    )
+    _write_output(spark, tmp_path, v2)
+    assembly_tick(spark, out)
+    t = SnapshotTable(os.path.join(out, "assembled"))
+    assert t.compact(spark)["rewritten"] >= 2
+    v3 = v2.filter(F.col("conv_id") != "c3")
+    _write_output(spark, tmp_path, v3)
+    res = assembly_tick(spark, out)
+    assert res == {
+        "bootstrap": False, "changed_convs": 0, "removed_convs": 1,
+        "convs_total": 5,
+    }
+    assert _stored(spark, out) == _oneshot(v3)

@@ -226,45 +226,37 @@ def test_standalone_apply_deletes_invalidates_snapshot(spark, transcripts_dir, t
     spark.sql(f"DROP TABLE IF EXISTS {snap.snapshot_table_name(out)}")
 
 
-def test_doctor_checks_dedup_store(spark, transcripts_dir, tmp_path):
-    from fscrawler_spark.plans.dedup_store import _paths as dedup_paths
+def test_doctor_checks_dedup_store(spark, transcripts_dir, tmp_path, monkeypatch):
+    from fscrawler_spark.plans import dedup_store
     from fscrawler_spark.plans.dedup_store import dedup_tick
 
     inp = os.path.join(transcripts_dir, "transcripts.parquet")
     out = str(tmp_path / "ds")
     run_extraction_job(spark, inp, out, SETTINGS)
-    dedup_tick(spark, out, store_buckets=4)
+    dedup_tick(spark, out)
     res = check_output(spark, out)
     assert res["ok"] is True, res["findings"]
+    root = os.path.join(out, dedup_store.STORE_DIR)
 
-    p = dedup_paths(out)
-    # dirty marker -> ERROR
-    meta = json.load(open(p["meta"]))
-    json.dump(dict(meta, dirty=True), open(p["meta"], "w"))
-    res = check_output(spark, out)
-    assert not res["ok"] and "dedup_store_dirty" in _codes(res)
-
-    # stale signature scheme -> WARN only
-    stale = dict(meta, params=dict(meta["params"], sig_version=1))
-    json.dump(stale, open(p["meta"], "w"))
-    res = check_output(spark, out)
+    # stale signature scheme -> WARN only, read off the manifest summary
+    with monkeypatch.context() as m:
+        m.setattr(dedup_store, "_SIG_VERSION", dedup_store._SIG_VERSION + 1)
+        res = check_output(spark, out)
     assert res["ok"] and "dedup_sig_stale" in _codes(res)
 
-    # orphaned cluster rows (id signed nowhere) -> ERROR
-    json.dump(meta, open(p["meta"], "w"))
-    spark.createDataFrame(
-        [("not-a-signed-id", "not-a-signed-id")], "id string, cluster_id string"
-    ).write.mode("append").parquet(os.path.join(p["clusters"], "db=0"))
+    # the store root gets the snapshot-table checks: a data file
+    # rewritten in place -> ERROR
+    data = os.path.join(root, "data")
+    victim = os.path.join(data, sorted(os.listdir(data))[0])
+    with open(victim, "ab") as f:
+        f.write(b"x")
     res = check_output(spark, out)
-    assert not res["ok"] and "dedup_orphan_clusters" in _codes(res)
+    assert not res["ok"] and "table_file_length_drift" in _codes(res)
 
-    # corrupt meta -> ERROR
-    with open(p["meta"], "w") as f:
-        f.write("{nope")
+    # the retired partitioned layout (meta JSON, no _snap/) -> WARN only
+    shutil.rmtree(root)
+    os.makedirs(os.path.join(root, "state"))
+    with open(os.path.join(root, "_dedup_meta.json"), "w") as f:
+        json.dump({"params": {}}, f)
     res = check_output(spark, out)
-    assert not res["ok"] and "corrupt_dedup_meta" in _codes(res)
-
-    # dir without meta -> WARN only
-    os.remove(p["meta"])
-    res = check_output(spark, out)
-    assert "dedup_meta_missing" in _codes(res)
+    assert res["ok"] and "dedup_legacy_layout" in _codes(res)

@@ -703,3 +703,29 @@ def test_cli_sync_dag_loop_and_spec_types(spark, tmp_path, capsys):
                    "views": [{"name": "m", "root": "m", "keys": "conv_id"}]}, f)
     rc = main(["--output", out, "--sync-dag", spec], spark=spark)
     assert rc == 2 and "'keys' must be a list" in capsys.readouterr().err
+
+
+def test_delta_sync_materializes_through_session_policy(spark, tmp_path, monkeypatch):
+    """Every materialization of a delta sync goes through
+    session.materialize (one durability policy: a reliable checkpoint
+    when the session has a checkpoint dir): the changelog and the
+    transformed rows in plans/derived, the keyed diff in snapshot_table."""
+    from fscrawler_spark.plans import derived, snapshot_table
+    from fscrawler_spark.session import materialize
+
+    up, dv = _tables(spark, tmp_path)
+    sync_derived_table(spark, up, dv, _transform, keys=KEYS)
+    up.upsert(spark, _df(spark, [("c0", 0, "edited"), ("c2", 9, "born")]), keys=KEYS)
+    calls = []
+    for mod in (derived, snapshot_table):
+        monkeypatch.setattr(
+            mod,
+            "materialize",
+            lambda df, _name=mod.__name__: calls.append(_name) or materialize(df),
+        )
+    r = sync_derived_table(spark, up, dv, _transform, keys=KEYS)
+    assert r["mode"] == "delta"
+    assert sorted(calls) == sorted(
+        [derived.__name__] * 2 + [snapshot_table.__name__]
+    )
+    _equiv(spark, up, dv)

@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import datetime as dt
 import json
+import math
 
 import pytest
 from pyspark.sql import functions as F
@@ -284,6 +285,28 @@ def test_canon_expr_noop_for_map_free(spark):
     for name in ("s", "xs"):
         expr = _canon_expr(F.col(name), df.schema[name].dataType)
         assert expr._jc.toString() == F.col(name)._jc.toString()
+
+
+def test_signed_zero_rewrite_is_not_a_change(spark, tmp_path):
+    """-0.0 == 0.0 under SQL equality: a float/double rewritten 0.0 ->
+    -0.0 (top level or nested) emits no change rows, while a real
+    0.0 -> 1.0 edit still emits its update pair."""
+    sch = "conv_id string, turn_idx int, v double, f float, xs array<double>"
+    t = SnapshotTable(str(tmp_path / "z"))
+    t.overwrite(
+        spark,
+        spark.createDataFrame([("a", 0, 0.0, 0.0, [0.0]), ("b", 0, 0.0, 0.0, [1.0])], sch),
+    )
+    t.upsert(spark, spark.createDataFrame([("a", 0, -0.0, -0.0, [-0.0])], sch))
+    row = t.read(spark).filter("conv_id = 'a'").first()
+    # the sign really is stored: only the comparison may ignore it
+    assert math.copysign(1.0, row["v"]) < 0 and math.copysign(1.0, row["xs"][0]) < 0
+    assert _counts(t.read_changes(spark, 1, 2)) == {}
+    t.upsert(spark, spark.createDataFrame([("a", 0, 1.0, -0.0, [-0.0])], sch))
+    assert _counts(t.read_changes(spark, 2, 3)) == {
+        "update_preimage": 1,
+        "update_postimage": 1,
+    }
 
 
 def test_changelog_drives_incremental_curation(spark, tmp_path):
